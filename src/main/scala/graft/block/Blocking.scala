@@ -230,7 +230,27 @@ object Blocking {
    * feature table is broadcastable at test scale and an ordinary shuffle
    * join at web scale.
    */
-  def candidatePairs(blocks: DataFrame, cfg: Config = Config()): DataFrame = {
+  def candidatePairs(blocks: DataFrame, cfg: Config = Config()): DataFrame =
+    blockedPairs(blocks, cfg, delta = false)
+
+  /**
+   * Incremental candidate pairs: blocks carry a `fresh` BOOLEAN column
+   * (true = the row belongs to the arriving batch) and ONLY pairs touching
+   * a fresh doc are generated, under the SAME small/hot/purge skew policy
+   * as [[candidatePairs]] (via `Dedup.blockPairs`' delta mode). Blocks with
+   * no fresh member — at a daily-increment ratio, nearly all of them — are
+   * dropped at the thin per-key stats before any pair work, and hot blocks
+   * pair each fresh doc with its ±snWindow mention-sorted neighbors instead
+   * of cross-joining batch×block. The corpus side costs one block-key map
+   * pass + the thin stats aggregate; it is never pair-joined against itself.
+   */
+  def deltaCandidatePairs(blocks: DataFrame, cfg: Config = Config()): DataFrame =
+    blockedPairs(blocks, cfg, delta = true)
+
+  /** The body of [[candidatePairs]] (`delta = false`) and
+    * [[deltaCandidatePairs]] (`delta = true`: `fresh` rides the payload and
+    * gates pairs to those touching a fresh member). */
+  private def blockedPairs(blocks: DataFrame, cfg: Config, delta: Boolean): DataFrame = {
     val spark = blocks.sparkSession
     import spark.implicits._
 
@@ -257,40 +277,14 @@ object Blocking {
     // payload is copied O(n) per member through the C(n,2) stream and the
     // SN lead arrays, and only the ids are ever emitted (see
     // Dedup.blockPairsWithStats rowSortKey doc).
+    val payload = if (delta) Seq($"id", $"fresh") else Seq($"id")
     graft.dedup.Dedup.blockPairs(
-        blocks.select($"key", $"url".as("id"), $"mention"),
-        struct($"id"), cfg.maxBlock, cfg.purgeLimit, cfg.snWindow,
+        blocks.select(Seq($"key", $"url".as("id"), $"mention") ++ payload.tail: _*),
+        struct(payload: _*), cfg.maxBlock, cfg.purgeLimit, cfg.snWindow,
+        touching = if (delta) Some(p => p.getField("fresh")) else None,
         rowSortKey = Some(struct($"mention", tiebreak($"id"))))
       .select($"a.id".as("url_a"), $"b.id".as("url_b"))
       .dropDuplicates("url_a", "url_b") // A2 analog: dedup multiply-blocked pairs
-  }
-
-  /**
-   * Incremental candidate pairs: blocks carry a `fresh` BOOLEAN column
-   * (true = the row belongs to the arriving batch) and ONLY pairs touching
-   * a fresh doc are generated, under the SAME small/hot/purge skew policy
-   * as [[candidatePairs]] (via `Dedup.blockPairs`' delta mode). Blocks with
-   * no fresh member — at a daily-increment ratio, nearly all of them — are
-   * dropped at the thin per-key stats before any pair work, and hot blocks
-   * pair each fresh doc with its ±snWindow mention-sorted neighbors instead
-   * of cross-joining batch×block. The corpus side costs one block-key map
-   * pass + the thin stats aggregate; it is never pair-joined against itself.
-   */
-  def deltaCandidatePairs(blocks: DataFrame, cfg: Config = Config()): DataFrame = {
-    val spark = blocks.sparkSession
-    import spark.implicits._
-    val tiebreak: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-      if (blocks.schema("url").dataType == org.apache.spark.sql.types.StringType) id128
-      else identity
-    // same thin-payload discipline as candidatePairs: mention is row-level
-    // sort metadata; only (id, fresh) ride the pair stream
-    graft.dedup.Dedup.blockPairs(
-        blocks.select($"key", $"url".as("id"), $"mention", $"fresh"),
-        struct($"id", $"fresh"), cfg.maxBlock, cfg.purgeLimit, cfg.snWindow,
-        touching = Some(p => p.getField("fresh")),
-        rowSortKey = Some(struct($"mention", tiebreak($"id"))))
-      .select($"a.id".as("url_a"), $"b.id".as("url_b"))
-      .dropDuplicates("url_a", "url_b")
   }
 
   /**

@@ -61,26 +61,22 @@ object ConnectedComponents {
     * that many map tasks per downstream stage PER ITERATION — measured
     * ~1 s/iteration of pure scheduling on a 1.6k-edge graph (64 near-empty
     * tasks × ~6 stages × 6 iterations is the serial floor the north-rule
-    * scaling measurement pays at every cluster size). Env-overridable for
-    * A/B measurement only. */
-  private def ccFanIn: Int =
-    sys.env.get("GRAFT_CC_FANIN").map(_.toInt).getOrElse(16)
+    * scaling measurement pays at every cluster size). */
+  private val ccFanIn = 16
 
   /** Target thin-edge rows per loop shuffle partition (~60-100 MB of
-    * (url, url) pairs). Env-overridable for A/B measurement only. */
-  private def rowsPerPartition: Long =
-    sys.env.get("GRAFT_CC_ROWS_PER_PARTITION").map(_.toLong).getOrElse(500000L)
+    * (url, url) pairs). */
+  private val rowsPerPartition = 500000L
 
   /** Driver budget for the union-find finish: edge sets at or below this
     * row count are collected and closed in memory. 2M (url, url) pairs at
     * ~60 B/url is ≲ 250 MB of driver heap transiently — the same order as
     * one collected ANN top-up chunk, and two orders below the driver heap
-    * any production Spark cluster runs with. 0 disables the local finish
-    * (distributed star rounds all the way to fixpoint — the path the
-    * property tests pin against the union-find oracle). Env-overridable
-    * for A/B measurement only. */
-  private[cluster] def localFinishEdges: Long =
-    sys.env.get("GRAFT_CC_LOCAL_EDGES").map(_.toLong).getOrElse(2000000L)
+    * any production Spark cluster runs with. A `localEdgeBudget` of 0
+    * disables the local finish (distributed star rounds all the way to
+    * fixpoint — the path the property tests pin against the union-find
+    * oracle). */
+  private[cluster] val localFinishEdges = 2000000L
 
   /** Shuffle-partition count for one loop iteration, sized from the CURRENT
     * edge count: `max(ccFanIn, edges / rowsPerPartition)`. At bench scale
@@ -161,15 +157,12 @@ object ConnectedComponents {
     // the same stage) at ccFanIn tasks — measured 600+ CPU-seconds starved
     // onto 16 tasks at 400k docs. Only the in-loop checkpoints (sized from
     // the shrinking edge count) use the small fan-in.
-    val tEdges0 = System.nanoTime()
     val renamed = edges.select(col(aCol).as("u"), col(bCol).as("v"))
     val e0 = (if (edgesCanonical) renamed
               else renamed.filter($"u" =!= $"v").distinct())
       .localCheckpoint(eager = true)
 
     val initialEdges = e0.count() // cheap: counts the checkpoint blocks
-    if (sys.env.contains("GRAFT_CC_VERBOSE"))
-      println(f"[cc] edges_materialized n=$initialEdges sec=${(System.nanoTime() - tEdges0) / 1e9}%.2f")
     val e0Blocks = org.apache.spark.sql.graftbridge.ColumnBridge.checkpointedRdd(e0)
     def freeE0(): Unit = e0Blocks.foreach(_.unpersist(blocking = false))
     if (initialEdges == 0L)
@@ -177,10 +170,7 @@ object ConnectedComponents {
         e0.select($"u".as("url"), $"v".as("cluster_id")), rootsIncluded = false,
         None, () => freeE0())
     if (initialEdges <= localEdgeBudget && localEdgeBudget > 0L) {
-      val tLf0 = System.nanoTime()
       val (assign, look, done) = localFinish(spark, e0)
-      if (sys.env.contains("GRAFT_CC_VERBOSE"))
-        println(f"[cc] local_finish sec=${(System.nanoTime() - tLf0) / 1e9}%.2f")
       // assign reads e0 (its node set) — blocks stay alive until the caller
       // materializes, then cleanup frees them with the label broadcast
       return Converged(assign, rootsIncluded = true, Some(look),
@@ -209,7 +199,6 @@ object ConnectedComponents {
     loop.conf.set("spark.sql.shuffle.partitions", parts.toString)
     var e = org.apache.spark.sql.graftbridge.ColumnBridge.rebindToSession(loop, e0)
 
-    val verbose = sys.env.contains("GRAFT_CC_VERBOSE")
     var converged = false
     var iter = 0
     var lastSig: (Long, Long) = (-1L, -1L)
@@ -252,7 +241,6 @@ object ConnectedComponents {
     }
 
     while (!converged && iter < maxIterations) {
-      val iterT0 = System.nanoTime()
       val small = starRound(e)
 
       // lazy checkpoint: the checksum aggregate below materializes it, so
@@ -269,7 +257,6 @@ object ConnectedComponents {
       // waiting for the async ContextCleaner (GC-stall avoidance)
       prevBlocks.foreach(_.unpersist(blocking = false))
       prevBlocks = org.apache.spark.sql.graftbridge.ColumnBridge.checkpointedRdd(next)
-      if (verbose) println(f"[cc] iter=$iter edges=${sig._1} parts=$parts sec=${(System.nanoTime() - iterT0) / 1e9}%.2f converged=$converged")
       lastSig = sig
       e = next
       iter += 1
@@ -362,7 +349,7 @@ object ConnectedComponents {
     * is why graft.ops.Sessions raises it to 4g in every production session
     * (16-byte hash ids sit two orders below the ceiling). Callers running
     * bare sessions near the 2M budget must either raise maxResultSize or
-    * lower `GRAFT_CC_LOCAL_EDGES`. */
+    * pass a smaller `localEdgeBudget`. */
   private def localFinish(spark: SparkSession, edges: DataFrame)
       : (DataFrame, org.apache.spark.sql.Column => org.apache.spark.sql.Column, () => Unit) = {
     import spark.implicits._

@@ -481,15 +481,15 @@ object Dedup {
     val withN = rows.join(liveStats.select($"key", $"n", $"pmin"), "key")
 
     // C(n,2) via TWO stock generators (posexplode, then explode of the
-    // tail slice) instead of the custom PairCombinations generator: the
-    // custom Generator is CodegenFallback, which (a) evaluates row-at-a-time
+    // tail slice) instead of a custom C(n,2) Generator: a custom
+    // Generator is CodegenFallback, which (a) evaluates row-at-a-time
     // through interpreted eval and (b) breaks the WholeStageCodegen span
     // around the hottest stream in every near-dup/blocking operator (the
     // pre-dedup pair stream — 4M+ rows at bench sf0.1, ~quadratic in block
     // size everywhere). explode/posexplode are ExplodeBase and stay inside
     // codegen; the slice reads the grouped members array in place (no
     // nested C(n,2) array is ever materialized — peak per outer row is the
-    // O(n) tail slice, same bound as the generator's O(n) element table).
+    // O(n) tail slice, same bound as a generator's O(n) element table).
     // EXPLICIT-N round-robin repartition between the group assembly and the
     // pair explode: the C(n,2) stream this stage generates is quadratic in
     // block size, but AQE sizes every ENSURE_REQUIREMENTS exchange by its
@@ -506,7 +506,7 @@ object Dedup {
     //    plan shape and evens out blocks of different sizes (§2.5).
     //  - N sizing: with the transferTo stall fixed (Sessions survival
     //    configs) an interleaved clean-canary fan-out sweep over 8/32/64
-    //    (tools/BenchExtra minima, 4 heavy queries) reads 11.38/11.34/11.89 s
+    //    (per-query minima over 4 heavy queries) reads 11.38/11.34/11.89 s
     //    — one-task-per-core is free at bench scale, and anything finer
     //    only adds dispatch overhead. defaultParallelism gives exactly
     //    that on any core count (the 900k-doc scaling points at local[2/8]
@@ -514,12 +514,10 @@ object Dedup {
     //    AQE's byte-blind coalescing, never a ceiling on big streams);
     //    numShufflePartitions/2 keeps a conf-proportional floor for
     //    deployments whose pair streams genuinely need thousands of
-    //    partitions. GRAFT_PAIR_FANOUT overrides for A/B measurement
-    //    (GRAFT_CC_FANIN precedent).
+    //    partitions.
     val spark2 = blocks.sparkSession
-    val nParts = sys.env.get("GRAFT_PAIR_FANOUT").map(_.toInt).getOrElse(
-      math.max(spark2.sparkContext.defaultParallelism,
-        spark2.sessionState.conf.numShufflePartitions / 2))
+    val nParts = math.max(spark2.sparkContext.defaultParallelism,
+      spark2.sessionState.conf.numShufflePartitions / 2)
     val smallAll = withN
       .filter($"n".between(2, cap))
       .groupBy($"key").agg(collect_list($"p").as("members"))

@@ -10,14 +10,19 @@ import org.apache.spark.sql.functions._
  * Per-stage / per-partition lineage counters (SURVEY.md §2.5 A5; north rule
  * "per-partition lineage and counters written alongside snapshot
  * checkpoints"). The reference logs skip/discard counters ad hoc
- * (`/root/reference/relik/reader/data/relik_reader_data.py:815-841`); here
- * they are first-class: `df.observe(...)` metrics collected at action time
- * plus an explicit partition histogram, dumped as JSON next to the stage
- * manifest.
+ * (relik's `reader/data/relik_reader_data.py:815-841`); here they are
+ * first-class: a row count and partition histogram dumped as JSON next to
+ * the stage manifest.
+ *
+ * The counters are NOT collected at the stage's own action:
+ * [[partitionCounts]] runs a separate `groupBy(spark_partition_id)` job
+ * over the DataFrame it is given — in `ErPipeline.runCheckpointed`, the
+ * re-read committed snapshot — so the histogram describes that read's
+ * splits, not the tasks that wrote the snapshot.
  */
 object Lineage {
 
-  /** Row-count + per-partition histogram of a stage output. */
+  /** Row count per partition of `df` (one extra Spark job). */
   def partitionCounts(df: DataFrame): Seq[(Int, Long)] = {
     df.select(spark_partition_id().as("pid"))
       .groupBy("pid").count()

@@ -25,7 +25,16 @@ import graft.schema.MatchEdge
  */
 object PairScorer {
 
-  case class Weights(jaro: Double = 0.3, lev: Double = 0.1, jaccard: Double = 0.6)
+  /** Similarity weights, each finite and non-negative: [[score]]'s jaro
+    * upper-bound conjunct (lev_sim at its maximum 1.0) is implied by
+    * `score >= threshold` only then, so any other weight would silently
+    * change the accepted edge set. */
+  case class Weights(jaro: Double = 0.3, lev: Double = 0.1, jaccard: Double = 0.6) {
+    Seq("jaro" -> jaro, "lev" -> lev, "jaccard" -> jaccard).foreach { case (field, w) =>
+      require(w >= 0.0 && w < Double.PositiveInfinity,
+        s"PairScorer.Weights.$field must be finite and non-negative, got $w")
+    }
+  }
 
   /**
    * `threshold` gates the weighted score; `jaccardFloor` is a CONJUNCTIVE

@@ -1,30 +1,35 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /**
  * Weather-robust per-query measurement (guide §1: measure first, and on
  * this host measure PAST the Firecracker throttle cycles): times the named
- * SparkEntry queries (or the full headline list) under the EXACT bench
- * session config, in R interleaved rounds, and reports the per-query MIN
- * together with each round's 1-thread ALU canary (same loop as
- * WeatherProbe; clean ≈ 0.75-0.9 s on this guest). The bench of record
- * (graft.Bench) is frozen single-pass per the measurement contract — this
- * tool exists so optimization deltas are not adjudicated on one sample of
- * a host whose effective CPU swings 2.5-4x on ~10-minute cycles
- * (BASELINE.md).
+ * queries (or the full headline list) under the bench session, in R
+ * interleaved rounds, and reports the per-query MIN together with each
+ * round's 1-thread ALU canary ([[WeatherProbe.canarySec]]; ≈ 0.75-0.9 s
+ * on an unthrottled core). The bench of record (graft.Bench) is frozen
+ * single-pass per the measurement contract — this tool exists so
+ * optimization deltas are not adjudicated on one sample of a host whose
+ * effective CPU swings 2.5-4x on ~10-minute cycles (BASELINE.md).
+ *
+ * A query that throws, in the warm-up or in any round, prints
+ * `FAILED <name> <message>`, is not run again, and is left out of the MIN
+ * lines and `total_min`; the summary lists it under `failed`.
  *
  * Usage: BenchExtra <sfDir> [rounds] [cores] [names,csv|all]
  * Output: one MIN line per query + a final JSON-ish summary line.
  */
 object BenchExtra {
-  private def canarySec(): Double = {
-    val t0 = System.nanoTime()
-    var x = 0x9e3779b97f4a7c15L
-    var i = 0
-    while (i < 400000000) { x ^= x << 13; x ^= x >>> 7; x ^= x << 17; i += 1 }
-    if (x == 0) System.err.println("")
-    (System.nanoTime() - t0) / 1e9
+
+  /** Per-query minima of the queries that never failed, and their sum. */
+  final case class Summary(mins: Seq[(String, Double)], total: Double, failed: Seq[String])
+
+  def summarize(names: Seq[String], samples: Map[String, Seq[Double]],
+                failed: Set[String]): Summary = {
+    val mins = names.filterNot(failed)
+      .flatMap(n => samples.get(n).filter(_.nonEmpty).map(s => n -> s.min))
+    Summary(mins, mins.map(_._2).sum, names.filter(failed))
   }
 
   def main(args: Array[String]): Unit = {
@@ -44,54 +49,41 @@ object BenchExtra {
       if (args.length > 3 && args(3) != "all") args(3).split(',').map(_.trim).toSeq
       else headline
 
-    val spark = graft.ops.Sessions.builder(cores, "graft-bench-extra")
-      .config("spark.sql.shuffle.partitions", (cores * 2).toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", (32L * 1024 * 1024).toString)
-      .config("spark.sql.files.maxPartitionBytes", (8L * 1024 * 1024).toString)
-      .config("spark.sql.files.openCostInBytes", (512L * 1024).toString)
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", (16L * 1024 * 1024).toString)
-      .config("spark.local.dir", "/dev/shm/graft-spark")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
-    def clones(s: SparkSession, dir: String) = {
-      import org.apache.spark.sql.functions.col
-      val d = s.read.parquet(s"$dir/documents.parquet").select(col("doc_id"), col("text"))
-      d.unionByName(d.withColumn("doc_id", col("doc_id") + 1000000))
-    }
-    def fn(name: String): (SparkSession, String) => org.apache.spark.sql.DataFrame =
-      name match {
-        case "dedup_minhash_full" =>
-          (s, dir) => graft.dedup.Dedup.minhashNearDupGroups(clones(s, dir), "doc_id", "text")
-        case "dedup_simhash_full" =>
-          (s, dir) => graft.dedup.Dedup.simhashNearDupPairs(clones(s, dir), "doc_id", "text")
-        case n => graft.SparkEntry.queries(n)
+    val spark = BenchQueries.session(cores, "graft-bench-extra")
+    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
+    // runs `n` once; false (after a FAILED line) if it throws
+    def run(n: String): Boolean =
+      try { BenchQueries.resolve(n)(spark, sfDir).count(); true }
+      catch {
+        case NonFatal(e) =>
+          println(s"FAILED $n ${String.valueOf(e.getMessage).takeWhile(_ != '\n')}")
+          failed += n
+          false
       }
 
     // warm-up pass (JIT + codegen), untimed
-    names.foreach { n => try fn(n)(spark, sfDir).count() catch { case _: Throwable => () } }
+    names.foreach(run)
 
     val samples = scala.collection.mutable.Map.empty[String, List[Double]].withDefaultValue(Nil)
     val canaries = scala.collection.mutable.ArrayBuffer.empty[Double]
     (1 to rounds).foreach { r =>
-      val c = canarySec()
+      val c = WeatherProbe.canarySec()
       canaries += c
-      names.foreach { n =>
+      names.filterNot(failed).foreach { n =>
         val t0 = System.nanoTime()
-        try fn(n)(spark, sfDir).count() catch { case _: Throwable => () }
-        val sec = (System.nanoTime() - t0) / 1e9
-        samples(n) = sec :: samples(n)
-        System.err.println(f"[bench-extra] round=$r canary=$c%.2f $n $sec%.3f")
+        if (run(n)) {
+          val sec = (System.nanoTime() - t0) / 1e9
+          samples(n) = sec :: samples(n)
+          System.err.println(f"[bench-extra] round=$r canary=$c%.2f $n $sec%.3f")
+        }
       }
     }
-    val mins = names.map(n => n -> samples(n).min)
-    mins.foreach { case (n, m) => println(f"MIN $n $m%.3f") }
-    val total = mins.map(_._2).sum
-    val qjson = mins.map { case (n, m) => f""""$n":$m%.3f""" }.mkString("{", ",", "}")
+    val summary = summarize(names, samples.toMap, failed.toSet)
+    summary.mins.foreach { case (n, m) => println(f"MIN $n $m%.3f") }
+    val qjson = summary.mins.map { case (n, m) => f""""$n":$m%.3f""" }.mkString("{", ",", "}")
+    val fjson = summary.failed.map(n => s""""$n"""").mkString("[", ",", "]")
     val cjson = canaries.map(c => f"$c%.2f").mkString("[", ",", "]")
-    println(f"""{"metric":"total_min","value":$total%.3f,"unit":"sec","queries":$qjson,"canaries":$cjson,"rounds":$rounds,"sf":"$sfDir"}""")
+    println(f"""{"metric":"total_min","value":${summary.total}%.3f,"unit":"sec","queries":$qjson,"failed":$fjson,"canaries":$cjson,"rounds":$rounds,"sf":"$sfDir"}""")
     spark.stop()
   }
 }

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.scheduler._
-
 /** Job-level wall breakdown of the 900k-doc scaling workload (the north
   * rule's timed job) at a given core count: `DebugErScale <corpusDir>
   * [cores]`. Prints every job ≥ 50 ms and driver-side gaps ≥ 50 ms of the
@@ -20,42 +18,20 @@ object DebugErScale {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    case class Job(id: Int, t0: Long, var t1: Long, var tasks: Int, site: String)
-    val jobs = new java.util.concurrent.ConcurrentHashMap[Int, Job]()
-    @volatile var record = false
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = if (record) {
-        val site = Option(e.properties)
-          .flatMap(p => Option(p.getProperty("callSite.short")))
-          .getOrElse("?")
-        jobs.put(e.jobId, Job(e.jobId, e.time, -1L,
-          e.stageInfos.map(_.numTasks).sum, site.take(70)))
-      }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit = if (record) {
-        Option(jobs.get(e.jobId)).foreach(_.t1 = e.time)
-      }
-    })
+    val rec = new QueryProfile.Recorder
+    spark.sparkContext.addSparkListener(rec)
 
     val pages = spark.read.parquet(corpusDir)
       .as[graft.schema.Page](org.apache.spark.sql.Encoders.product[graft.schema.Page])
     (1 to 2).foreach { i =>
-      if (i == 2) { jobs.clear(); record = true }
+      if (i == 2) rec.start()
       val t0 = System.nanoTime()
       val n = graft.pipeline.ErPipeline.run(pages).count()
       val sec = (System.nanoTime() - t0) / 1e9
       println(f"ERSCALE run=$i cores=$cores rows=$n sec=$sec%.2f")
     }
-    record = false
-    Thread.sleep(300)
-    val sorted = jobs.values().toArray(Array.empty[Job]).sortBy(_.t0)
-    var prevEnd = -1L
-    sorted.foreach { j =>
-      if (prevEnd > 0 && j.t0 - prevEnd > 50)
-        println(f"  GAP   ${(j.t0 - prevEnd) / 1000.0}%7.2f s  (driver-side)")
-      val dur = if (j.t1 > 0) (j.t1 - j.t0) / 1000.0 else -1.0
-      if (dur >= 0.05) println(f"  JOB ${j.id}%3d $dur%7.2f s  tasks=${j.tasks}%5d  ${j.site}")
-      prevEnd = math.max(prevEnd, if (j.t1 > 0) j.t1 else j.t0)
-    }
+    rec.stop()
+    rec.printJobs(minGapMs = 50, minJobSec = 0.05)
     spark.stop()
   }
 }

@@ -6,36 +6,15 @@ import java.nio.file.{Files, Paths}
  * Dump `.explain("formatted")` for named SparkEntry queries under the EXACT
  * bench session config: `ExplainQuery <sfDir> <outDir> <suffix> <names,csv>`.
  * Writes `<outDir>/<name>_<suffix>.txt` per query (the plans/r06 deliverable).
- * Accepts the bench-only stress names (dedup_minhash_full/dedup_simhash_full).
+ * Names as [[BenchQueries.resolve]], so the bench-only stress tiers work too.
  */
 object ExplainQuery {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, suffix, namesCsv) = args.take(4)
-    val spark = graft.ops.Sessions.builder(32, "graft-explain")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", (32L * 1024 * 1024).toString)
-      .config("spark.sql.files.maxPartitionBytes", (8L * 1024 * 1024).toString)
-      .config("spark.sql.files.openCostInBytes", (512L * 1024).toString)
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", (16L * 1024 * 1024).toString)
-      .config("spark.local.dir", "/dev/shm/graft-spark")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = BenchQueries.session(32, "graft-explain")
     new java.io.File(outDir).mkdirs()
-    def clones(dir: String) = {
-      import org.apache.spark.sql.functions.col
-      val d = spark.read.parquet(s"$dir/documents.parquet").select(col("doc_id"), col("text"))
-      d.unionByName(d.withColumn("doc_id", col("doc_id") + 1000000))
-    }
     namesCsv.split(',').map(_.trim).filter(_.nonEmpty).foreach { name =>
-      val df = name match {
-        case "dedup_minhash_full" =>
-          graft.dedup.Dedup.minhashNearDupGroups(clones(sfDir), "doc_id", "text")
-        case "dedup_simhash_full" =>
-          graft.dedup.Dedup.simhashNearDupPairs(clones(sfDir), "doc_id", "text")
-        case n => graft.SparkEntry.queries(n)(spark, sfDir)
-      }
+      val df = BenchQueries.resolve(name)(spark, sfDir)
       val plan = df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
       Files.writeString(Paths.get(s"$outDir/${name}_$suffix.txt"), plan)

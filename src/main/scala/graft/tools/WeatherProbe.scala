@@ -19,15 +19,22 @@ package graft.tools
  * uncontended core). ~64 MB heap, ~17% duty cycle on its one CPU.
  */
 object WeatherProbe {
+
+  /** Seconds one core takes for a fixed xorshift loop (the canary; also
+    * timed by BenchExtra around each of its rounds). */
+  def canarySec(): Double = {
+    val t0 = System.nanoTime()
+    var x = 0x9e3779b97f4a7c15L
+    var i = 0
+    while (i < 400000000) { x ^= x << 13; x ^= x >>> 7; x ^= x << 17; i += 1 }
+    if (x == 0) System.err.println("")
+    (System.nanoTime() - t0) / 1e9
+  }
+
   def main(args: Array[String]): Unit = {
     val periodMs = if (args.nonEmpty) args(0).toLong else 5000L
     while (true) {
-      val t0 = System.nanoTime()
-      var x = 0x9e3779b97f4a7c15L
-      var i = 0
-      while (i < 400000000) { x ^= x << 13; x ^= x >>> 7; x ^= x << 17; i += 1 }
-      if (x == 0) System.err.println("")
-      println(f"PROBE ${(System.nanoTime() - t0) / 1e9}%.3f")
+      println(f"PROBE ${canarySec()}%.3f")
       Console.flush()
       Thread.sleep(periodMs)
     }

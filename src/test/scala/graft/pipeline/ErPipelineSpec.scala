@@ -169,4 +169,15 @@ class ErPipelineSpec extends SparkSpec {
     assert(a == 0 && b == 0, s"paths disagree: $a/$b")
     pairs.unpersist()
   }
+
+  test("scorer weights: a negative or non-finite weight fails naming its field") {
+    for ((w, field) <- Seq(
+        (() => PairScorer.Weights(lev = -0.1), "lev"),
+        (() => PairScorer.Weights(jaro = Double.NaN), "jaro"),
+        (() => PairScorer.Weights(jaccard = Double.PositiveInfinity), "jaccard"))) {
+      val e = intercept[IllegalArgumentException](w())
+      assert(e.getMessage.contains(s"Weights.$field"), e.getMessage)
+    }
+    assert(PairScorer.Weights(jaro = 0.0) == PairScorer.Weights(0.0, 0.1, 0.6))
+  }
 }
