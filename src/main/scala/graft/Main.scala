@@ -17,13 +17,21 @@ import graft.pipeline.ErPipeline
  * same-blocking-key pairs, and docs/sec.
  */
 object Main {
-  def main(args: Array[String]): Unit = {
-    val nDocs = if (args.length > 0) args(0).toLong else 10000L
-    val workDir = if (args.length > 1) args(1) else "/tmp/graft-run"
-    val cores = if (args.length > 2) args(2) else sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
+  /** `raw` parsed by `parse`; a malformed value fails naming its `source`
+    * (the argument or environment variable it came from). */
+  private[graft] def setting[T](source: String, raw: String)(parse: String => T): T =
+    try parse(raw)
+    catch { case _: NumberFormatException =>
+      throw new IllegalArgumentException(s"$source: not a number: '$raw'") }
 
-    val spark = graft.ops.Sessions.builder(cores.toInt, "graft-er")
-      .config("spark.sql.shuffle.partitions", cores)
+  def main(args: Array[String]): Unit = {
+    val nDocs = args.lift(0).fold(10000L)(setting("nDocs argument", _)(_.toLong))
+    val workDir = args.lift(1).getOrElse("/tmp/graft-run")
+    val cores = setting(if (args.length > 2) "cores argument" else "SPARK_GRAFT_CPUS",
+      args.lift(2).getOrElse(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")))(_.toInt)
+
+    val spark = graft.ops.Sessions.builder(cores, "graft-er")
+      .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.local.dir", "/dev/shm/graft-spark")
       .config("spark.sql.autoBroadcastJoinThreshold", (32L * 1024 * 1024).toString)
@@ -31,20 +39,20 @@ object Main {
     spark.sparkContext.setLogLevel("WARN")
 
     val t0 = System.nanoTime()
-    val pages = CorpusGen.pages(spark, nDocs, seed = 42L, partitions = cores.toInt * 2)
+    val pages = CorpusGen.pages(spark, nDocs, seed = 42L, partitions = cores * 2)
     val clusters = ErPipeline.runCheckpointed(spark, pages, workDir)
     val nClusters = clusters.select("cluster_id").distinct().count()
     val nPages = clusters.count()
     val elapsed = (System.nanoTime() - t0) / 1e9
 
-    val gold = CorpusGen.goldPairs(spark, nDocs, seed = 42L, partitions = cores.toInt * 2)
+    val gold = CorpusGen.goldPairs(spark, nDocs, seed = 42L, partitions = cores * 2)
     val res = PairwiseF1.evaluate(gold, clusters)
 
     // candidate-miss split (strong_matching_eval.py:86-127 analog): which
     // FNs never survived blocking vs were scored/clustered apart — read the
     // pairs stage snapshot the checkpointed run just committed (in 128-bit
-    // id space; translated back to urls via the features snapshot's
-    // (url, nid) dictionary — a diagnostics-only join, off the hot path)
+    // id space; translated back to urls by hashing the features snapshot's
+    // urls — a diagnostics-only join, off the hot path)
     val candPairs = ErPipeline.pairsToUrls(
       spark.read.parquet(s"$workDir/pairs/data"),
       spark.read.parquet(s"$workDir/features/data"))

@@ -1,6 +1,6 @@
 package graft.block
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 import graft.functions.GraftFunctions._
@@ -97,8 +97,7 @@ object Blocking {
     val toks = split(normalize_text(col("text")), " ")
     val raw0 = pages.toDF().select(
       col("url"),
-      array_join(slice(split(normalize_text(substring_index(col("text"), "\n", 1)), " "),
-        1, cfg.mentionMaxTokens), " ").as("mention"),
+      anchorMention(col("text"), cfg).as("mention"),
       token_ngram_hashes(toks, 1, cfg.seed).as("tokenHashes"),
       tf_filtered_hashes(toks, cfg.minTf, cfg.minTfKeep, cfg.seed).as("freqHashes"))
     // normalize+tokenize+hash every page is the single heaviest map kernel;
@@ -122,22 +121,15 @@ object Blocking {
 
     val withStops = if (cfg.dfStopRatio < 1.0) {
       val stopArr = dfStopSet(raw, cfg, scope)
-      // Wipeout guard: a doc whose post-stop feature set would fall below
-      // `minTfKeep` keeps its UNstopped features instead (the same fallback
-      // contract tfFilteredHashes applies to the TF filter). Without it,
-      // boilerplate-dominated corpora (tiny shared vocabulary, e.g. short
-      // template pages) get their entire feature set subtracted away: every
-      // doc degenerates to an empty set → one sentinel signature → one
-      // mega-block, and clone recall collapses to the sorted-neighborhood
-      // window. freqHashes ⊆ tokenHashes in the unified hash domain, so one
+      // freqHashes ⊆ tokenHashes in the unified hash domain, so one wipeout
       // condition on the freq survivors keeps both columns consistent.
       raw
         .crossJoin(broadcast(stopArr)) // BroadcastNestedLoopJoin of a 1-row build side
         .withColumn("freqClean", array_except($"freqHashes", $"stops"))
-        .withColumn("keepAll", size($"freqClean") < cfg.minTfKeep)
+        .withColumn("keepAll", wipedOut($"freqClean", cfg))
         .withColumn("tokenHashes",
-          when($"keepAll", $"tokenHashes").otherwise(array_except($"tokenHashes", $"stops")))
-        .withColumn("freqHashes", when($"keepAll", $"freqHashes").otherwise($"freqClean"))
+          stopGuarded($"keepAll", $"tokenHashes", array_except($"tokenHashes", $"stops")))
+        .withColumn("freqHashes", stopGuarded($"keepAll", $"freqHashes", $"freqClean"))
         .drop("stops", "freqClean", "keepAll")
     } else raw
 
@@ -145,6 +137,26 @@ object Blocking {
       .withColumn("sig", minhash_signature(col("freqHashes"), cfg.minhashHashes, cfg.seed))
       .drop("freqHashes")
   }
+
+  /** The anchor mention of a page's `text`: its first line, normalized and
+    * truncated to `mentionMaxTokens` tokens. Shared by [[features]] and
+    * [[graft.streaming.EntityAssign.pageFeatures]]. */
+  private[graft] def anchorMention(text: Column, cfg: Config): Column =
+    array_join(slice(split(normalize_text(substring_index(text, "\n", 1)), " "),
+      1, cfg.mentionMaxTokens), " ")
+
+  /** Wipeout guard of the DF-stop subtraction: true when fewer than
+    * `minTfKeep` of a doc's freq hashes survive it (`freqClean`), and the
+    * doc keeps its UNstopped features (tfFilteredHashes' TF-filter
+    * contract). Without it, boilerplate-only corpora subtract every doc to
+    * an empty set → one sentinel signature → one mega-block, and clone
+    * recall collapses to the sorted-neighborhood window. */
+  private[graft] def wipedOut(freqClean: Column, cfg: Config): Column =
+    size(freqClean) < cfg.minTfKeep
+
+  /** A stop-subtracted feature column under the [[wipedOut]] guard. */
+  private[graft] def stopGuarded(wiped: Column, unstopped: Column, stopped: Column): Column =
+    when(wiped, unstopped).otherwise(stopped)
 
   /**
    * One-row DF-stop set — `(stops: sorted ARRAY<LONG>)` — over a
@@ -264,13 +276,13 @@ object Blocking {
     // UNABLE_TO_ACQUIRE_MEMORY in the 6M-doc dress rehearsal (BASELINE.md
     // lesson 5). The sorted-neighborhood branch orders by (mention,
     // id128(id)): similar anchor mentions sit adjacently (the recall
-    // signal), and the tiebreak is the id's 128-bit hash so the STRING-id
-    // and HASH-id disciplines (ErPipeline.Config.hashIds) visit hot-block
-    // neighbors in the IDENTICAL order — on the hash path the id already
-    // IS id128(url), so hashing the tiebreak on the string path makes the
-    // two pair sets equal by construction (property-tested end-to-end in
-    // ErPipelineSpec).
-    val tiebreak: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
+    // signal), and the tiebreak is the id's 128-bit hash so url-string ids
+    // (ErPipeline.incremental, which runs on urls) and the 128-bit ids of
+    // ErPipeline.run visit hot-block neighbors in the IDENTICAL order — on
+    // the hash-keyed path the id already IS id128(url), so hashing the
+    // tiebreak of a string id makes the two pair sets equal by construction
+    // (property-tested end-to-end in ErPipelineSpec).
+    val tiebreak: Column => Column =
       if (blocks.schema("url").dataType == org.apache.spark.sql.types.StringType) id128
       else identity
     // mention rides as the SN ROW sort key, never in the payload: the
@@ -307,15 +319,5 @@ object Blocking {
       .select(pairs.columns.map(c => col(s"`$c`")) ++ Seq(
         col("gf_a.mention").as("mention_a"), col("gf_a.sig").as("sig_a"),
         col("gf_b.mention").as("mention_b"), col("gf_b.sig").as("sig_b")): _*)
-  }
-
-  /** Block-size histogram for lineage / skew monitoring (A5 analog). */
-  def blockStats(blocks: DataFrame): DataFrame = {
-    blocks.groupBy("key").count()
-      .agg(
-        count(lit(1)).as("n_blocks"),
-        max("count").as("max_block"),
-        expr("percentile_approx(count, 0.99)").as("p99_block"),
-        sum(expr("count * (count - 1) / 2")).as("naive_pairs"))
   }
 }

@@ -355,8 +355,8 @@ object ConnectedComponents {
     import spark.implicits._
     val nodeType = edges.schema("u").dataType
     nodeType match {
-      // the production default (ErPipeline.Config.hashIds) finishes on
-      // 128-bit struct ids: specialize to primitive arrays — the generic
+      // the batch ER pipeline (ErPipeline.run / runCheckpointed) finishes
+      // on 128-bit struct ids: specialize to primitive arrays — the generic
       // path below collects boxed Rows, builds a HashMap[Row, Row] and
       // broadcasts it through java serialization, which stage telemetry
       // measured as a 7.6 s single-threaded driver gap at the 2 M-edge

@@ -1,7 +1,6 @@
 package graft.functions
 
 import java.text.Normalizer
-import java.util.Locale
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
@@ -167,9 +166,6 @@ object StringSimKernels {
   }
 
   def normalizeU(s: UTF8String): UTF8String = UTF8String.fromString(normalize(s.toString))
-
-  /** Locale-pinned lowercase used anywhere case-folding is needed. */
-  def lowerRoot(s: String): String = s.toLowerCase(Locale.ROOT)
 }
 
 /** `JaroWinkler(a STRING, b STRING) -> DOUBLE` — codegen'd static call. */

@@ -14,7 +14,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  *   <dir>/manifest.json      snapshot record: row count, schema, stage name,
  *                            config fingerprint — written LAST, atomically
  *                            (tmp + move), so its presence == commit marker
- *   <dir>/counters.json      per-partition lineage counters (Lineage)
+ *   <dir>/counters.json      per-partition Lineage counters, pre-manifest
  *
  * Resume semantics (north rule "any stage resumes mid-run"): a stage whose
  * manifest exists and matches the config fingerprint is *skipped* and its
@@ -57,8 +57,10 @@ object Checkpoints {
 
   /**
    * Run-or-resume a stage: if a committed snapshot with this fingerprint
-   * exists, read it back; otherwise compute `df`, write Parquet, then commit
-   * the manifest. Returns the (re)read DataFrame — downstream stages always
+   * exists, read it back (its counters untouched); otherwise compute `df`,
+   * write Parquet, re-read it once for its partition histogram, write
+   * `counters.json`, then commit the manifest with the histogram's row
+   * total. Returns the (re)read DataFrame — downstream stages always
    * consume the checkpointed table, truncating lineage between stages.
    */
   def stage(spark: SparkSession, dir: String, name: String, fingerprint: String)
@@ -67,10 +69,10 @@ object Checkpoints {
     if (manifestExists(dir, fingerprint)) {
       spark.read.parquet(dataDir)
     } else {
-      val computed = df
-      computed.write.mode("overwrite").parquet(dataDir)
+      df.write.mode("overwrite").parquet(dataDir)
       val written = spark.read.parquet(dataDir)
-      writeManifest(dir, Manifest(name, written.count(), fingerprint, written.schema.toDDL))
+      val rows = Lineage.writeHistogram(dir, name, Lineage.partitionCounts(written))
+      writeManifest(dir, Manifest(name, rows, fingerprint, written.schema.toDDL))
       written
     }
   }

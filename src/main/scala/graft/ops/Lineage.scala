@@ -14,11 +14,10 @@ import org.apache.spark.sql.functions._
  * first-class: a row count and partition histogram dumped as JSON next to
  * the stage manifest.
  *
- * The counters are NOT collected at the stage's own action:
- * [[partitionCounts]] runs a separate `groupBy(spark_partition_id)` job
- * over the DataFrame it is given — in `ErPipeline.runCheckpointed`, the
- * re-read committed snapshot — so the histogram describes that read's
- * splits, not the tasks that wrote the snapshot.
+ * [[Checkpoints.stage]] writes a stage's counters once, at commit, from
+ * one [[partitionCounts]] job over the re-read snapshot (so the histogram
+ * describes that read's splits, not the write tasks); a resumed stage
+ * keeps them.
  */
 object Lineage {
 
@@ -33,8 +32,13 @@ object Lineage {
   }
 
   def writeCounters(dir: String, stage: String, df: DataFrame,
-                    extra: Map[String, Long] = Map.empty): Unit = {
-    val parts = partitionCounts(df)
+                    extra: Map[String, Long] = Map.empty): Unit =
+    writeHistogram(dir, stage, partitionCounts(df), extra)
+
+  /** Write `counters.json` for a histogram already taken; returns its row
+    * total. */
+  private[ops] def writeHistogram(dir: String, stage: String, parts: Seq[(Int, Long)],
+                                  extra: Map[String, Long] = Map.empty): Long = {
     val partsJson = parts.map { case (p, c) => s"""{"partition":$p,"rows":$c}""" }
       .mkString("[", ",", "]")
     val extraJson = extra.map { case (k, v) => s""""$k":$v""" }.mkString(",")
@@ -46,5 +50,6 @@ object Lineage {
         f""""skew_factor":$skew%.3f,"partitions":$partsJson${if (extraJson.nonEmpty) "," + extraJson else ""}}"""
     Files.createDirectories(Paths.get(dir))
     Files.write(Paths.get(dir, "counters.json"), json.getBytes(StandardCharsets.UTF_8))
+    rows
   }
 }

@@ -1,13 +1,13 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.block.Blocking
 import graft.cluster.ConnectedComponents
 import graft.eval.PairwiseF1
 import graft.functions.GraftFunctions.id128
-import graft.ops.{Checkpoints, Lineage}
+import graft.ops.Checkpoints
 import graft.schema.Page
 import graft.score.PairScorer
 
@@ -20,40 +20,40 @@ import graft.score.PairScorer
  * `run` executes lazily end-to-end (bench path, no intermediate I/O);
  * `runCheckpointed` commits each stage as a snapshot table with manifest +
  * lineage counters and resumes any completed stage (north-rule contract).
+ * Both run the one stage chain in [[link]].
  *
- * ID DISCIPLINE (`Config.hashIds`, default on): the hot path — block-key
- * explode, pair generation, pair dedup, both attach joins, edge set, CC
- * node ids — shuffles 128-bit hash ids (STRUCT<h1,h2>, 16 bytes; collision
- * math at [[graft.functions.GraftFunctions.id128]]) instead of url strings
+ * ID DISCIPLINE: the hot path — block-key explode, pair generation, pair
+ * dedup, both attach joins, edge set, CC node ids — shuffles 128-bit hash
+ * ids (STRUCT<h1,h2>, 16 bytes; collision math at
+ * [[graft.functions.GraftFunctions.id128]]) instead of url strings
  * (~60-80 bytes + offsets). Every one of those stages shuffles each doc's
  * id b+|mention| times, so id width is a first-order term in total shuffle
  * bytes — and on a memory-bandwidth-bound executor, bytes are wall-clock.
- * Urls are hashed in once (a pure expression over the cached feature scan,
- * no join) and restored once at output ([[relabelMinUrl]]), which also
- * restores the string path's exact labeling contract: cluster_id = the
- * component's lexicographic minimum url. The two paths produce IDENTICAL
- * (url, cluster_id) output (property-tested in ErPipelineSpec), so
- * `hashIds = false` survives only as the A/B baseline and oracle for that
- * test.
+ * Urls are hashed in once (a pure expression over the feature table, no
+ * join) and restored once at output ([[relabelMinUrl]]): cluster_id is the
+ * component's lexicographic minimum url. ErPipelineSpec keeps a url-keyed
+ * reference pipeline built from the public layer calls and checks that it
+ * yields the IDENTICAL (url, cluster_id) multiset.
  */
 object ErPipeline {
 
   case class Config(
       blocking: Blocking.Config = Blocking.Config(),
-      scorer: PairScorer.Config = PairScorer.Config(),
-      hashIds: Boolean = true) {
+      scorer: PairScorer.Config = PairScorer.Config()) {
     def fingerprint: String =
       s"b=${blocking.bands}x${blocking.rowsPerBand},mh=${blocking.minhashHashes}," +
         s"seed=${blocking.seed},cap=${blocking.maxBlock},sn=${blocking.snWindow}," +
         s"w=${scorer.weights.jaro}/${scorer.weights.lev}/${scorer.weights.jaccard}," +
-        s"tau=${scorer.threshold},jfloor=${scorer.jaccardFloor}," +
-        s"ids=${if (hashIds) "h128" else "url"}"
+        s"tau=${scorer.threshold},jfloor=${scorer.jaccardFloor}"
   }
 
+  /** A per-stage step over a named stage's lazily built output: the
+    * identity in [[run]], [[Checkpoints.stage]] in [[runCheckpointed]]. */
+  private type Commit = (String, => DataFrame) => DataFrame
+
   /** (url, …, cluster_id: 128-bit struct) → (url, cluster_id: url): label
-    * every hash-id component by its minimum member url — bit-identical to
-    * the string-id path's deterministic labeling. Two thin shuffles at
-    * OUTPUT scale (one map-side-combined min per component + one join of
+    * every hash-id component by its minimum member url. Two thin shuffles
+    * at OUTPUT scale (one map-side-combined min per component + one join of
     * the n-row assignment against the per-component labels), paid once —
     * versus the id-width savings paid on every hot-path shuffle. */
   private def relabelMinUrl(assigned: DataFrame): DataFrame = {
@@ -63,11 +63,27 @@ object ErPipeline {
       .select(col("url"), col("cluster_url").as("cluster_id"))
   }
 
-  /** Re-key a feature table (url, mention, sig, …) to 128-bit hash ids —
-    * a narrow projection (no join); consumers see the same `url` column
-    * name with the 16-byte struct in it. */
-  private def hashKeyed(feats: DataFrame): DataFrame =
-    feats.withColumn("url", id128(col("url")))
+  /** The stage chain of [[run]] and [[runCheckpointed]]: `feats` (url,
+    * mention, sig, …) → (url, cluster_id) over the `pages` url universe,
+    * each of the pairs, edges and clusters stages passed through `commit`.
+    * edgesCanonical: candidatePairs ends in a canonical-order
+    * dropDuplicates, attachFeatures joins one feature row per id, and
+    * scoring only filters — the edge set reaches CC already distinct with
+    * no self-loops, so CC's defensive distinct (a full extra exchange of
+    * the edge set, guide §2.4) is skipped. */
+  private def link(pages: DataFrame, feats: DataFrame, cfg: Config, commit: Commit): DataFrame = {
+    // a narrow projection (no join): the same `url` column, holding the id
+    val keyed = feats.withColumn("url", id128(col("url")))
+    val pairs = commit("pairs",
+      Blocking.candidatePairs(Blocking.blockKeys(keyed, cfg.blocking), cfg.blocking))
+    val edges = commit("edges",
+      PairScorer.score(Blocking.attachFeatures(pairs, keyed), cfg.scorer))
+    commit("clusters", {
+      val nodes = pages.select(col("url"), id128(col("url")).as("nid"))
+      relabelMinUrl(ConnectedComponents.assignAllKeyed(nodes, edges, "nid",
+        edgesCanonical = true))
+    })
+  }
 
   /** pages → (url, cluster_id). `feats` is consumed twice (block keys and
     * scorer payload) and its computation — extraction, normalization,
@@ -88,82 +104,24 @@ object ErPipeline {
     // wall-clock (BASELINE.md round-5 floor diagnosis). The full-width
     // feature row still exists once per run in the DF-stop pass's inner
     // cache (Blocking.features), which genuinely consumes the arrays twice.
-    val featsU = scope.cache(Blocking.features(pages, cfg.blocking, Some(scope))
+    val feats = scope.cache(Blocking.features(pages, cfg.blocking, Some(scope))
       .select(col("url"), col("mention"), col("sig")))
-    // edgesCanonical: candidatePairs ends in a canonical-order
-    // dropDuplicates, attachFeatures joins one feature row per url, and
-    // scoring only filters — the edge set reaches CC already distinct with
-    // no self-loops, so CC's defensive distinct (a full extra exchange of
-    // the edge set, guide §2.4) is skipped.
-    val out = if (cfg.hashIds) {
-      val feats = hashKeyed(featsU)
-      val blocks = Blocking.blockKeys(feats, cfg.blocking)
-      val pairs = Blocking.candidatePairs(blocks, cfg.blocking)
-      val edges = PairScorer.score(Blocking.attachFeatures(pairs, feats), cfg.scorer)
-      val nodes = pages.toDF().select(col("url"), id128(col("url")).as("nid"))
-      relabelMinUrl(ConnectedComponents.assignAllKeyed(nodes, edges, "nid",
-        edgesCanonical = true))
-    } else {
-      val blocks = Blocking.blockKeys(featsU, cfg.blocking)
-      val pairs = Blocking.candidatePairs(blocks, cfg.blocking)
-      val edges = PairScorer.score(Blocking.attachFeatures(pairs, featsU), cfg.scorer)
-      ConnectedComponents.assignAll(pages.toDF().select("url"), edges,
-        edgesCanonical = true)
-    }
-    scope.close()
-    out
+    try link(pages.toDF(), feats, cfg, (_, df) => df) finally scope.close()
   }
 
-  /** Checkpointed variant: every stage is a committed snapshot (resume-safe;
-    * the fingerprint carries the id discipline so a resume never mixes url-
-    * and hash-keyed artifacts). Feature/pair/edge snapshots live in id space
-    * — on the hash path the features snapshot keeps BOTH the url and the
-    * derived id column, so downstream consumers (e.g. Main's candidate-miss
-    * diagnostics) can translate pair snapshots back to urls with one
-    * broadcast-or-shuffle join against it. */
+  /** Checkpointed variant: every stage is a committed snapshot with its
+    * lineage counters (resume-safe; the fingerprint carries the config).
+    * The features snapshot is keyed by url; the pair and edge snapshots
+    * live in 128-bit id space, and [[pairsToUrls]] translates them back
+    * (e.g. for Main's candidate-miss diagnostics). */
   def runCheckpointed(spark: SparkSession, pages: Dataset[Page], workDir: String,
                       cfg: Config = Config()): DataFrame = {
-    val fp = cfg.fingerprint
-
-    val pagesT = Checkpoints.stage(spark, s"$workDir/pages", "pages", fp) {
-      pages.toDF()
-    }
-    Lineage.writeCounters(s"$workDir/pages", "pages", pagesT)
-
-    val feats = Checkpoints.stage(spark, s"$workDir/features", "features", fp) {
-      val f = Blocking.features(
-        pagesT.as[Page](org.apache.spark.sql.Encoders.product[Page]), cfg.blocking)
-      if (cfg.hashIds) f.withColumn("nid", id128(col("url"))) else f
-    }
-    Lineage.writeCounters(s"$workDir/features", "features", feats)
-
-    // id-space view of the features snapshot (url dropped, nid as the key)
-    val featsKeyed =
-      if (cfg.hashIds) feats.drop("url").withColumnRenamed("nid", "url")
-      else feats
-
-    val pairs = Checkpoints.stage(spark, s"$workDir/pairs", "pairs", fp) {
-      Blocking.candidatePairs(Blocking.blockKeys(featsKeyed, cfg.blocking), cfg.blocking)
-    }
-    Lineage.writeCounters(s"$workDir/pairs", "pairs", pairs)
-
-    val edges = Checkpoints.stage(spark, s"$workDir/edges", "edges", fp) {
-      PairScorer.score(Blocking.attachFeatures(pairs, featsKeyed), cfg.scorer)
-    }
-    Lineage.writeCounters(s"$workDir/edges", "edges", edges)
-
-    val clusters = Checkpoints.stage(spark, s"$workDir/clusters", "clusters", fp) {
-      // edgesCanonical: same argument as [[run]] — the pairs stage ends in
-      // a canonical dropDuplicates and scoring only filters
-      if (cfg.hashIds) {
-        val nodes = pagesT.select(col("url"), id128(col("url")).as("nid"))
-        relabelMinUrl(ConnectedComponents.assignAllKeyed(nodes, edges, "nid",
-          edgesCanonical = true))
-      } else ConnectedComponents.assignAll(pagesT.select("url"), edges,
-        edgesCanonical = true)
-    }
-    Lineage.writeCounters(s"$workDir/clusters", "clusters", clusters)
-    clusters
+    val stage: Commit = (name, df) =>
+      Checkpoints.stage(spark, s"$workDir/$name", name, cfg.fingerprint)(df)
+    val pagesT = stage("pages", pages.toDF())
+    val feats = stage("features", Blocking.features(
+      pagesT.as[Page](org.apache.spark.sql.Encoders.product[Page]), cfg.blocking))
+    link(pagesT, feats, cfg, stage)
   }
 
   /**
@@ -274,18 +232,14 @@ object ErPipeline {
   }
 
   /** Translate an id-space pair table (url_a, url_b as 128-bit structs)
-    * back to url strings via the features snapshot's (url, nid) columns —
-    * for diagnostics over checkpointed pair/edge artifacts. No-op input
-    * passes through when the pairs are already strings. */
+    * back to url strings by hashing the features snapshot's `url` column —
+    * for diagnostics over checkpointed pair/edge artifacts. */
   def pairsToUrls(pairs: DataFrame, feats: DataFrame): DataFrame = {
-    if (pairs.schema("url_a").dataType == org.apache.spark.sql.types.StringType) pairs
-    else {
-      val dict = feats.select(col("nid"), col("url"))
-      pairs
-        .join(dict.select(col("nid").as("url_a"), col("url").as("ua")), Seq("url_a"))
-        .join(dict.select(col("nid").as("url_b"), col("url").as("ub")), Seq("url_b"))
-        .select(col("ua").as("url_a"), col("ub").as("url_b"))
-    }
+    val dict = feats.select(id128(col("url")).as("id"), col("url"))
+    pairs
+      .join(dict.select(col("id").as("url_a"), col("url").as("ua")), Seq("url_a"))
+      .join(dict.select(col("id").as("url_b"), col("url").as("ub")), Seq("url_b"))
+      .select(col("ua").as("url_a"), col("ub").as("url_b"))
   }
 
   /** Convenience: run + evaluate against labeled pairs. */

@@ -20,19 +20,6 @@ case class Page(
 /** Ground-truth cluster membership emitted by the generator. */
 case class GoldCluster(url: String, entity_id: Long)
 
-/** Labeled pair sharing a blocking key — the F1 population (BASELINE.json:metric). */
-case class GoldPair(url_a: String, url_b: String, block_key: String, is_match: Boolean)
-
-/** One page's blocking-ready features (stage-1 output). */
-case class PageFeatures(
-    url: String,
-    mention: String,       // normalized anchor mention (first extracted line)
-    tokenHashes: Array[Long], // sorted-distinct hashed text tokens
-    sig: Array[Long])       // MinHash signature over tokenHashes
-
-/** A candidate pair produced by blocking (stage-2 output); url_a < url_b. */
-case class CandidatePair(url_a: String, url_b: String)
-
 /** A scored pair above threshold (stage-3 output) — a match edge. */
 case class MatchEdge(
     url_a: String,
@@ -41,9 +28,6 @@ case class MatchEdge(
     lev_sim: Double,
     jaccard: Double,
     score: Double)
-
-/** Final cluster assignment: cluster_id = lexicographic-min url of the component. */
-case class ClusterAssignment(url: String, cluster_id: String)
 
 /** One annotation: entity `label` at [start, end) of a doc — char or token
   * coordinates by context (`/root/reference/relik/inference/data/objects.py:55-58`). */

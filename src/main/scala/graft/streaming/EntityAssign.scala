@@ -98,20 +98,18 @@ object EntityAssign {
    * The streamable subset of [[Blocking.features]]: pure expressions over
    * the page plus one broadcast equi-join against the FROZEN one-row stop
    * set (an inner join on a constant, not a crossJoin — stream-static
-   * cross joins are rejected by the streaming planner). Subtraction
-   * carries the offline pass's wipeout guard: a page whose post-stop
-   * feature set falls below `minTfKeep` signs its unstopped features
-   * instead, so boilerplate-only corpora degrade exactly like the offline
-   * path (`Blocking.features` guard) instead of collapsing to a sentinel
-   * signature.
+   * cross joins are rejected by the streaming planner). The mention and
+   * the stop subtraction under its wipeout guard are the offline pass's own
+   * column helpers ([[Blocking.anchorMention]], [[Blocking.wipedOut]]), so
+   * with the corpus's own stops this yields `Blocking.features`' exact
+   * (url, mention, sig) — the precondition `ErPipeline.incremental` states.
    */
   def pageFeatures(pages: DataFrame, stops: DataFrame,
                    cfg: Blocking.Config = Blocking.Config()): DataFrame = {
     val toks = split(normalize_text(col("text")), " ")
     pages.select(
         col("url"),
-        array_join(slice(split(normalize_text(substring_index(col("text"), "\n", 1)), " "),
-          1, cfg.mentionMaxTokens), " ").as("mention"),
+        Blocking.anchorMention(col("text"), cfg).as("mention"),
         tf_filtered_hashes(toks, cfg.minTf, cfg.minTfKeep, cfg.seed).as("freqHashes"))
       .withColumn("__one", lit(1))
       .join(broadcast(stops.withColumn("__one", lit(1))), "__one")
@@ -119,8 +117,8 @@ object EntityAssign {
       .select(
         col("url"), col("mention"),
         minhash_signature(
-          when(size(col("freqClean")) < cfg.minTfKeep, col("freqHashes"))
-            .otherwise(col("freqClean")),
+          Blocking.stopGuarded(Blocking.wipedOut(col("freqClean"), cfg),
+            col("freqHashes"), col("freqClean")),
           cfg.minhashHashes, cfg.seed).as("sig"))
   }
 

@@ -7,14 +7,24 @@ class CheckpointSpec extends SparkSpec {
 
   test("stage computes once, then resumes from manifest") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    import java.nio.file.{Files, Paths}
+    val dir = Files.createTempDirectory("graft-ckpt").toString
     var computed = 0
     def build() = { computed += 1; Seq((1, "a"), (2, "b")).toDF("id", "v") }
+    val counters = Paths.get(dir, "s1", "counters.json")
+    def rows(f: String) = "\"rows\":(\\d+)".r
+      .findFirstMatchIn(new String(Files.readAllBytes(Paths.get(dir, "s1", f)))).map(_.group(1))
 
     val first = Checkpoints.stage(spark, s"$dir/s1", "s1", "fp1")(build())
     assert(first.count() == 2 && computed == 1)
+    // the commit writes counters.json, whose rows the manifest repeats
+    assert(rows("counters.json") == Some("2") && rows("manifest.json") == Some("2"))
+    val (bytes, mtime) = (Files.readAllBytes(counters), Files.getLastModifiedTime(counters))
+    Thread.sleep(20) // a rewrite would then show a later mtime
     val second = Checkpoints.stage(spark, s"$dir/s1", "s1", "fp1")(build())
     assert(second.count() == 2 && computed == 1, "must not recompute on same fingerprint")
+    assert(Files.readAllBytes(counters).sameElements(bytes) &&
+      Files.getLastModifiedTime(counters) == mtime, "resume must not rewrite counters")
 
     // changed config fingerprint -> recompute
     val third = Checkpoints.stage(spark, s"$dir/s1", "s1", "fp2")(build())

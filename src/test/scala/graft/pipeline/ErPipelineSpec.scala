@@ -67,19 +67,23 @@ class ErPipelineSpec extends SparkSpec {
   }
 
   test("hash-id path ≡ string-id path: identical (url, cluster_id) output") {
-    // the 128-bit-id hot path (Config.hashIds, the production default) must
-    // not change SEMANTICS, only shuffle bytes: same candidate pairs (the
-    // SN tiebreak is id128(id) on both paths by construction), same edges,
-    // same components, and — via relabelMinUrl — the exact same min-url
+    // ErPipeline.run's 128-bit ids must not change SEMANTICS against the
+    // same public layer calls keyed by url strings: same candidate pairs
+    // (the SN tiebreak is id128(id) for both by construction), same edges,
+    // same components, and — via the min-url relabel — the exact same
     // cluster labels. Exact multiset equality, not just partition equality.
     val p2 = CorpusGen.pages(spark, 20000L, seed = 99L).cache()
-    val viaHash = ErPipeline.run(p2, ErPipeline.Config(hashIds = true))
-    val viaUrl = ErPipeline.run(p2, ErPipeline.Config(hashIds = false))
+    val viaHash = ErPipeline.run(p2)
+    val feats = Blocking.features(p2).select("url", "mention", "sig").cache()
+    val pairs = Blocking.candidatePairs(Blocking.blockKeys(feats))
+    val edges = PairScorer.score(Blocking.attachFeatures(pairs, feats))
+    val viaUrl = graft.cluster.ConnectedComponents.assignAll(p2.toDF().select("url"), edges,
+      edgesCanonical = true)
     val onlyHash = viaHash.exceptAll(viaUrl).count()
     val onlyUrl = viaUrl.exceptAll(viaHash).count()
     assert(onlyHash == 0 && onlyUrl == 0,
       s"id disciplines diverged: $onlyHash rows only in hash path, $onlyUrl only in url path")
-    p2.unpersist()
+    feats.unpersist(); p2.unpersist()
   }
 
   test("batch-incremental ER ≡ full rebuild on corpus ∪ batch") {
@@ -87,8 +91,7 @@ class ErPipelineSpec extends SparkSpec {
     // corpus-independent features (DF-stops off) + all-pairs blocking
     // regime: the exact-equivalence precondition incremental() documents
     val cfg = ErPipeline.Config(
-      blocking = Blocking.Config(dfStopRatio = 1.0, maxBlock = 4096),
-      hashIds = false)
+      blocking = Blocking.Config(dfStopRatio = 1.0, maxBlock = 4096))
     val all = CorpusGen.pages(spark, 1200L, seed = 7L).cache()
     // deterministic split: ~1/4 of docs arrive as the new batch — some are
     // clone-cluster members whose siblings are in the old corpus (edges into

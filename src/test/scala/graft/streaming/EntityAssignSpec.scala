@@ -97,6 +97,23 @@ class EntityAssignSpec extends SparkSpec {
     assert(got == Seq(("p1", Some("zeta"), got.head._3)))
   }
 
+  test("pageFeatures with the corpus's own stops == Blocking.features (url, mention, sig)") {
+    // the precondition ErPipeline.incremental states for a batch featurized
+    // online: over the same corpus both paths give identical feature rows
+    val pages = graft.ingest.CorpusGen.pages(spark, 2000L, seed = 5L).cache()
+    val stops = EntityAssign.corpusStops(pages.toDF()).cache()
+    assert(stops.collect()(0).getAs[scala.collection.Seq[Long]]("stops").nonEmpty,
+      "corpus must have DF-stops for the subtraction to be exercised")
+    val offline = graft.block.Blocking.features(pages).select($"url", $"mention", $"sig")
+    val online = EntityAssign.pageFeatures(pages.toDF(), stops)
+    assert(online.count() == 2000L)
+    val onlyOffline = offline.exceptAll(online).count()
+    val onlyOnline = online.exceptAll(offline).count()
+    assert(onlyOffline == 0 && onlyOnline == 0,
+      s"feature paths diverged: $onlyOffline rows only offline, $onlyOnline only online")
+    stops.unpersist(); pages.unpersist()
+  }
+
   test("frozen build-time DF-stops route a NEW page of a known entity (round-5 rehearsal regression)") {
     // The failure shape AssignRehearsal measured at 600k docs: every page
     // carries high-DF glue vocabulary alongside its entity topic words. A
