@@ -29,8 +29,23 @@ object SparkEntry {
     * SPARK-23207) and every consumer below is row-order independent. */
   private def tSpread(spark: SparkSession, dir: String, name: String): DataFrame = {
     val df = t(spark, dir, name)
-    val small = new java.io.File(s"$dir/$name.parquet").length < 64L * 1024 * 1024
+    val small = dataBytes(spark, s"$dir/$name.parquet") < 64L * 1024 * 1024
     if (small) df.repartition(spark.sessionState.conf.numShufflePartitions) else df
+  }
+
+  /** Bytes of the data files a scan of `path` reads — one file, or every
+    * file under a directory layout, on any Hadoop filesystem. Names that
+    * start with `_` or `.` (`_SUCCESS`, `.crc` checksum sidecars) are not
+    * data, as in Spark's own file listing. */
+  private[graft] def dataBytes(spark: SparkSession, path: String): Long = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val files = p.getFileSystem(spark.sessionState.newHadoopConf()).listFiles(p, true)
+    var bytes = 0L
+    while (files.hasNext) {
+      val f = files.next()
+      if (!f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith(".")) bytes += f.getLen
+    }
+    bytes
   }
 
   /** Deterministically-messy urls planted from doc_id for the url queries:

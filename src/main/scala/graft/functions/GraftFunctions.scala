@@ -1,74 +1,182 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.types._
+
+/** A literal argument of a [[Kernel]]: INT, or BIGINT when `long`. A
+  * trailing one with a `default` may be left out of a SQL call; `ok`
+  * bounds its value, as `rule` says. */
+private[graft] final case class Param(name: String, long: Boolean = false,
+    default: Option[Long] = None, rule: String = "", ok: Long => Boolean = _ => true)
+
+private[graft] object Param {
+  def count(name: String): Param = Param(name, rule = ">= 1", ok = _ >= 1)
+  val seed: Param = Param("seed", long = true, default = Some(42L))
+}
+
+/**
+ * One graft function, declared once: its SQL name, the static method of a
+ * kernel object it calls, the types of its column arguments, its result
+ * type and its literal parameters. The Column API, [[GraftFunctions.register]]
+ * and `graft.plans.GraftExtensions` all build calls with [[build]].
+ */
+private[graft] final case class Kernel(name: String, kernels: AnyRef, method: String,
+    inputs: Seq[DataType], result: DataType, params: Param*) {
+
+  /** The call on `args`: the column arguments, then one constant per
+    * parameter. Fails naming the function (and the parameter) on a wrong
+    * argument count, or on a parameter that is not a constant integer
+    * within its type and rule. */
+  def build(args: Seq[Expression]): Expression = {
+    val (min, max) = (inputs.length + params.count(_.default.isEmpty), inputs.length + params.length)
+    if (args.length < min || args.length > max)
+      fail(s"takes ${if (min == max) s"$max" else s"$min to $max"} arguments, got ${args.length}")
+    val consts = params.zipWithIndex.map { case (p, i) =>
+      val v = args.lift(inputs.length + i).fold(p.default.get)(read(p, _))
+      if (p.long) Literal(v) else Literal(v.toInt)
+    }
+    ColumnBridge.kernel(name, kernels, method,
+      inputs ++ params.map(p => if (p.long) LongType else IntegerType), result,
+      args.take(inputs.length) ++ consts)
+  }
+
+  /** The Column-API call: the column arguments, then the parameter values. */
+  def apply(cols: Column*)(consts: Long*): Column =
+    ColumnBridge.column(build(cols.map(ColumnBridge.expression) ++ consts.map(Literal(_))))
+
+  private def read(p: Param, e: Expression): Long = {
+    val v = (if (e.foldable) e.eval() else fail(s"${p.name} must be a constant, got $e")) match {
+      case i: Int  => i.toLong
+      case l: Long => l
+      case _       => fail(s"${p.name} must be an INT or BIGINT, got $e")
+    }
+    if (!p.long && v != v.toInt) fail(s"${p.name} must fit in INT, got $v")
+    if (!p.ok(v)) fail(s"${p.name} must be ${p.rule}, got $v")
+    v
+  }
+
+  private def fail(msg: String): Nothing = throw new IllegalArgumentException(s"$name: $msg")
+}
 
 /**
  * Column-API + SQL surface of the graft function library (SURVEY.md §2.9,
- * §2.11). Mirrors `org.apache.spark.sql.functions`: each custom Catalyst
- * expression gets a typed `Column` wrapper, plus optional SQL registration
- * so `spark.sql("SELECT jaro_winkler(a,b) ...")` works.
+ * §2.11). Mirrors `org.apache.spark.sql.functions`: each kernel gets a
+ * typed `Column` wrapper, plus optional SQL registration so
+ * `spark.sql("SELECT jaro_winkler(a,b) ...")` works.
  */
 object GraftFunctions {
+  import Param.{count, seed}
 
-  private def col(e: Expression): Column = ColumnBridge.column(e)
-  private def expr(c: Column): Expression = ColumnBridge.expression(c)
+  private val longs = ArrayType(LongType, containsNull = false)
+
+  private val extractText = Kernel("extract_text", TextExtract, "extractU", Seq(BinaryType), StringType)
+  private val normalizeText =
+    Kernel("normalize_text", StringSimKernels, "normalizeU", Seq(StringType), StringType)
+  private val tokenizeOffsets = Kernel("tokenize_offsets", TokenizeKernels, "tokenizeOffsets",
+    Seq(StringType), ArrayType(TokenizeKernels.tokenType, containsNull = false))
+  private val splitSentences = Kernel("split_sentences", SentenceKernels, "splitSentences",
+    Seq(StringType), ArrayType(StringType, containsNull = false))
+  private val jaroWinkler = Kernel("jaro_winkler", StringSimKernels, "jaroWinklerU",
+    Seq(StringType, StringType), DoubleType)
+  private val levenshteinSim = Kernel("levenshtein_sim", StringSimKernels, "levenshteinSim",
+    Seq(StringType, StringType), DoubleType)
+  private val charShingleHashes = Kernel("char_shingle_hashes", HashKernels, "charShingles",
+    Seq(StringType), longs, count("k"), seed)
+  private val tokenNgramHashes = Kernel("token_ngram_hashes", HashKernels, "tokenNgrams",
+    Seq(ArrayType(StringType)), longs, count("n"), seed)
+  private val tokenNgramHashSeq = Kernel("token_ngram_hash_seq", HashKernels, "tokenNgramSeq",
+    Seq(ArrayType(StringType)), longs, count("n"), seed)
+  private val tfFilteredHashes = Kernel("tf_filtered_hashes", HashKernels, "tfFilteredHashes",
+    Seq(ArrayType(StringType)), longs, Param("minTf"), Param("minKeep"), seed)
+  private val minhashSignature = Kernel("minhash_signature", HashKernels, "minHashSig",
+    Seq(ArrayType(LongType)), longs, count("numHashes"), seed)
+  private val minhashBandKeys = Kernel("minhash_band_keys", HashKernels, "bandKeys",
+    Seq(ArrayType(LongType)), longs, count("bands"), count("rowsPerBand"))
+  private val simhash64Kernel = Kernel("simhash64", HashKernels, "simHash",
+    Seq(ArrayType(LongType)), LongType, seed)
+  private val simhashBandKeys = Kernel("simhash_band_keys", HashKernels, "simhashBandKeys",
+    Seq(LongType), longs,
+    Param("segments", rule = "a divisor of 64, >= 2", ok = s => s >= 2 && 64 % s == 0),
+    Param("choose", rule = "1 or 2", ok = c => c == 1 || c == 2))
+  private val rollingFingerprint = Kernel("rolling_fingerprint", HashKernels, "rollingFingerprint",
+    Seq(StringType), LongType)
+  private val hammingDist64 = Kernel("hamming_dist64", HashKernels, "hammingDistance64",
+    Seq(LongType, LongType), IntegerType)
+  private val minhashOverlap = Kernel("minhash_overlap", HashKernels, "sigOverlap",
+    Seq(ArrayType(LongType), ArrayType(LongType)), DoubleType)
+  private val jaccardSorted = Kernel("jaccard_sorted", HashKernels, "jaccardSorted",
+    Seq(ArrayType(LongType), ArrayType(LongType)), DoubleType)
+  private val cosineSim = Kernel("cosine_sim", VectorKernels, "cosine",
+    Seq(ArrayType(FloatType), ArrayType(FloatType)), DoubleType)
+  private val dotProduct = Kernel("dot_product", VectorKernels, "dot",
+    Seq(ArrayType(FloatType), ArrayType(FloatType)), DoubleType)
+  private val srpBandKeys = Kernel("srp_band_keys", VectorKernels, "srpBandKeys",
+    Seq(ArrayType(FloatType)), longs, count("bands"),
+    Param("bits", rule = "in [1, 64]", ok = b => b >= 1 && b <= 64), seed)
+
+  /** Every graft function, in registration order. */
+  private[graft] val catalog: Seq[Kernel] = Seq(extractText, normalizeText, tokenizeOffsets,
+    splitSentences, jaroWinkler, levenshteinSim, charShingleHashes, tokenNgramHashes,
+    tokenNgramHashSeq, tfFilteredHashes, minhashSignature, minhashBandKeys, simhash64Kernel,
+    simhashBandKeys, rollingFingerprint, hammingDist64, minhashOverlap, jaccardSorted,
+    cosineSim, dotProduct, srpBandKeys)
 
   /** html BINARY -> extracted text (frozen, byte-identical per input). */
-  def extract_text(html: Column): Column = col(ExtractText(expr(html)))
+  def extract_text(html: Column): Column = extractText(html)()
 
   /** NFD-fold + lowercase(ROOT) + alnum-collapse normalization. */
-  def normalize_text(s: Column): Column = col(NormalizeText(expr(s)))
+  def normalize_text(s: Column): Column = normalizeText(s)()
 
   /** Offset-preserving whitespace tokenizer: ARRAY<STRUCT<text,i,idx,idx_end>>. */
-  def tokenize_offsets(s: Column): Column = col(TokenizeWithOffsets(expr(s)))
+  def tokenize_offsets(s: Column): Column = tokenizeOffsets(s)()
 
   /** Abbreviation-aware sentence split (P2); sentences partition the text. */
-  def split_sentences(s: Column): Column = col(SplitSentences(expr(s)))
+  def split_sentences(s: Column): Column = splitSentences(s)()
 
-  def jaro_winkler(a: Column, b: Column): Column = col(JaroWinkler(expr(a), expr(b)))
+  def jaro_winkler(a: Column, b: Column): Column = jaroWinkler(a, b)()
 
-  def levenshtein_sim(a: Column, b: Column): Column = col(LevenshteinSim(expr(a), expr(b)))
+  def levenshtein_sim(a: Column, b: Column): Column = levenshteinSim(a, b)()
 
   def char_shingle_hashes(text: Column, k: Int, seed: Long = 42L): Column =
-    col(CharShingleHashes(expr(text), k, seed))
+    charShingleHashes(text)(k, seed)
 
   def token_ngram_hashes(tokens: Column, n: Int, seed: Long = 42L): Column =
-    col(TokenNgramHashes(expr(tokens), n, seed))
+    tokenNgramHashes(tokens)(n, seed)
 
   /** Positional (in-order, duplicates kept) twin of [[token_ngram_hashes]]. */
   def token_ngram_hash_seq(tokens: Column, n: Int, seed: Long = 42L): Column =
-    col(TokenNgramHashSeq(expr(tokens), n, seed))
+    tokenNgramHashSeq(tokens)(n, seed)
 
   def tf_filtered_hashes(tokens: Column, minTf: Int = 2, minKeep: Int = 8, seed: Long = 42L): Column =
-    col(TfFilteredHashes(expr(tokens), minTf, minKeep, seed))
+    tfFilteredHashes(tokens)(minTf, minKeep, seed)
 
   def minhash_signature(hashes: Column, numHashes: Int, seed: Long = 42L): Column =
-    col(MinHashSignature(expr(hashes), numHashes, seed))
+    minhashSignature(hashes)(numHashes, seed)
 
   def minhash_band_keys(sig: Column, bands: Int, rowsPerBand: Int): Column =
-    col(MinHashBandKeys(expr(sig), bands, rowsPerBand))
+    minhashBandKeys(sig)(bands, rowsPerBand)
 
-  def simhash64(hashes: Column, seed: Long = 42L): Column = col(SimHash64(expr(hashes), seed))
+  def simhash64(hashes: Column, seed: Long = 42L): Column = simhash64Kernel(hashes)(seed)
 
   def simhash_band_keys(fp: Column, segments: Int, choose: Int): Column =
-    col(SimHashBandKeys(expr(fp), segments, choose))
+    simhashBandKeys(fp)(segments, choose)
 
-  def rolling_fingerprint(text: Column): Column = col(RollingFingerprint(expr(text)))
+  def rolling_fingerprint(text: Column): Column = rollingFingerprint(text)()
 
-  def hamming_dist64(a: Column, b: Column): Column = col(HammingDist64(expr(a), expr(b)))
+  def hamming_dist64(a: Column, b: Column): Column = hammingDist64(a, b)()
 
-  def minhash_overlap(a: Column, b: Column): Column = col(MinHashOverlap(expr(a), expr(b)))
+  def minhash_overlap(a: Column, b: Column): Column = minhashOverlap(a, b)()
 
-  def jaccard_sorted(a: Column, b: Column): Column = col(JaccardSorted(expr(a), expr(b)))
+  def jaccard_sorted(a: Column, b: Column): Column = jaccardSorted(a, b)()
 
-  def cosine_sim(a: Column, b: Column): Column = col(CosineSim(expr(a), expr(b)))
+  def cosine_sim(a: Column, b: Column): Column = cosineSim(a, b)()
 
-  def dot_product(a: Column, b: Column): Column = col(DotProduct(expr(a), expr(b)))
+  def dot_product(a: Column, b: Column): Column = dotProduct(a, b)()
 
   def srp_band_keys(vec: Column, bands: Int, bits: Int, seed: Long = 42L): Column =
-    col(SrpBandKeys(expr(vec), bands, bits, seed))
+    srpBandKeys(vec)(bands, bits, seed)
 
   /** 128-bit identity key: two independently-seeded xxhash64 lanes packed
     * as STRUCT<h1:BIGINT,h2:BIGINT> — a 16-byte, codegen'd, orderable
@@ -84,51 +192,8 @@ object GraftFunctions {
       F.xxhash64(F.lit(0x9e3779b97f4a7c15L), c).as("h2"))
   }
 
-  private def lit(e: Expression): Int =
-    e.eval(org.apache.spark.sql.catalyst.InternalRow.empty) match {
-      case i: Int  => i
-      case l: Long => l.toInt
-      case other   => other.toString.toInt
-    }
-  private def litL(e: Expression): Long =
-    e.eval(org.apache.spark.sql.catalyst.InternalRow.empty) match {
-      case i: Int  => i.toLong
-      case l: Long => l
-      case other   => other.toString.toLong
-    }
-
   /** Register the SQL-facing functions on a session (idempotent). */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("extract_text", es => ExtractText(es.head), "built-in")
-    reg.createOrReplaceTempFunction("normalize_text", es => NormalizeText(es.head), "built-in")
-    reg.createOrReplaceTempFunction("jaro_winkler", es => JaroWinkler(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("levenshtein_sim", es => LevenshteinSim(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("char_shingle_hashes",
-      es => CharShingleHashes(es(0), lit(es(1)), if (es.length > 2) litL(es(2)) else 42L), "built-in")
-    reg.createOrReplaceTempFunction("token_ngram_hashes",
-      es => TokenNgramHashes(es(0), lit(es(1)), if (es.length > 2) litL(es(2)) else 42L), "built-in")
-    reg.createOrReplaceTempFunction("token_ngram_hash_seq",
-      es => TokenNgramHashSeq(es(0), lit(es(1)), if (es.length > 2) litL(es(2)) else 42L), "built-in")
-    reg.createOrReplaceTempFunction("minhash_signature",
-      es => MinHashSignature(es(0), lit(es(1)), if (es.length > 2) litL(es(2)) else 42L), "built-in")
-    reg.createOrReplaceTempFunction("minhash_band_keys",
-      es => MinHashBandKeys(es(0), lit(es(1)), lit(es(2))), "built-in")
-    reg.createOrReplaceTempFunction("simhash64",
-      es => SimHash64(es(0), if (es.length > 1) litL(es(1)) else 42L), "built-in")
-    reg.createOrReplaceTempFunction("rolling_fingerprint", es => RollingFingerprint(es.head), "built-in")
-    reg.createOrReplaceTempFunction("hamming_dist64", es => HammingDist64(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("minhash_overlap", es => MinHashOverlap(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("jaccard_sorted", es => JaccardSorted(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("cosine_sim", es => CosineSim(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("dot_product", es => DotProduct(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("tf_filtered_hashes",
-      es => TfFilteredHashes(es(0), lit(es(1)), lit(es(2)), if (es.length > 3) litL(es(3)) else 42L), "built-in")
-    reg.createOrReplaceTempFunction("srp_band_keys",
-      es => SrpBandKeys(es(0), lit(es(1)), lit(es(2)), if (es.length > 3) litL(es(3)) else 42L), "built-in")
-    reg.createOrReplaceTempFunction("simhash_band_keys",
-      es => SimHashBandKeys(es(0), lit(es(1)), lit(es(2))), "built-in")
-    reg.createOrReplaceTempFunction("tokenize_offsets", es => TokenizeWithOffsets(es.head), "built-in")
-    reg.createOrReplaceTempFunction("split_sentences", es => SplitSentences(es.head), "built-in")
-  }
+  def register(spark: SparkSession): Unit =
+    catalog.foreach(k => spark.sessionState.functionRegistry
+      .createOrReplaceTempFunction(k.name, k.build, "built-in"))
 }

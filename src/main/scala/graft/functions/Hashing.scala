@@ -2,11 +2,8 @@ package graft.functions
 
 import java.util.Arrays
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /**
@@ -320,199 +317,4 @@ object HashKernels {
     }
     inter.toDouble / (na + nb - inter)
   }
-}
-
-/** `MinHashOverlap(sigA, sigB) -> DOUBLE` — Jaccard estimate from signatures. */
-case class MinHashOverlap(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (ArrayType(LongType, _), ArrayType(LongType, _)) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(s"MinHashOverlap requires (ARRAY<LONG>, ARRAY<LONG>), got $other")
-  }
-  override def nullSafeEval(a: Any, b: Any): Any =
-    HashKernels.sigOverlap(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.HashKernels.sigOverlap($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): MinHashOverlap =
-    copy(left = l, right = r)
-}
-
-/** `JaccardSorted(a, b) -> DOUBLE` — exact Jaccard of sorted-distinct ARRAY<LONG>. */
-case class JaccardSorted(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (ArrayType(LongType, _), ArrayType(LongType, _)) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(s"JaccardSorted requires (ARRAY<LONG>, ARRAY<LONG>), got $other")
-  }
-  override def nullSafeEval(a: Any, b: Any): Any =
-    HashKernels.jaccardSorted(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.HashKernels.jaccardSorted($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): JaccardSorted =
-    copy(left = l, right = r)
-}
-
-/** `CharShingleHashes(text, k, seed) -> ARRAY<LONG>` (distinct, sorted). */
-case class CharShingleHashes(child: Expression, k: Int, seed: Long) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure("CharShingleHashes requires STRING")
-  override def nullSafeEval(input: Any): Any =
-    HashKernels.charShingles(input.asInstanceOf[UTF8String], k, seed)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashKernels.charShingles($c, $k, ${seed}L)")
-  override protected def withNewChildInternal(newChild: Expression): CharShingleHashes =
-    copy(child = newChild)
-}
-
-/** `TokenNgramHashes(tokens ARRAY<STRING>, n, seed) -> ARRAY<LONG>`. */
-case class TokenNgramHashes(child: Expression, n: Int, seed: Long) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(s"TokenNgramHashes requires ARRAY<STRING>, got $other")
-  }
-  override def nullSafeEval(input: Any): Any =
-    HashKernels.tokenNgrams(input.asInstanceOf[ArrayData], n, seed)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashKernels.tokenNgrams($c, $n, ${seed}L)")
-  override protected def withNewChildInternal(newChild: Expression): TokenNgramHashes =
-    copy(child = newChild)
-}
-
-/** `TokenNgramHashSeq(tokens ARRAY<STRING>, n, seed) -> ARRAY<LONG>` — positional, in order. */
-case class TokenNgramHashSeq(child: Expression, n: Int, seed: Long) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(s"TokenNgramHashSeq requires ARRAY<STRING>, got $other")
-  }
-  override def nullSafeEval(input: Any): Any =
-    HashKernels.tokenNgramSeq(input.asInstanceOf[ArrayData], n, seed)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashKernels.tokenNgramSeq($c, $n, ${seed}L)")
-  override protected def withNewChildInternal(newChild: Expression): TokenNgramHashSeq =
-    copy(child = newChild)
-}
-
-/** `TfFilteredHashes(tokens ARRAY<STRING>, minTf, minKeep, seed) -> ARRAY<LONG>`. */
-case class TfFilteredHashes(child: Expression, minTf: Int, minKeep: Int, seed: Long)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(s"TfFilteredHashes requires ARRAY<STRING>, got $other")
-  }
-  override def nullSafeEval(input: Any): Any =
-    HashKernels.tfFilteredHashes(input.asInstanceOf[ArrayData], minTf, minKeep, seed)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashKernels.tfFilteredHashes($c, $minTf, $minKeep, ${seed}L)")
-  override protected def withNewChildInternal(newChild: Expression): TfFilteredHashes =
-    copy(child = newChild)
-}
-
-/** `MinHashSignature(hashes ARRAY<LONG>, numHashes, seed) -> ARRAY<LONG>`. */
-case class MinHashSignature(child: Expression, numHashes: Int, seed: Long) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(s"MinHashSignature requires ARRAY<LONG>, got $other")
-  }
-  override def nullSafeEval(input: Any): Any =
-    HashKernels.minHashSig(input.asInstanceOf[ArrayData], numHashes, seed)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashKernels.minHashSig($c, $numHashes, ${seed}L)")
-  override protected def withNewChildInternal(newChild: Expression): MinHashSignature =
-    copy(child = newChild)
-}
-
-/** `MinHashBandKeys(sig ARRAY<LONG>, bands, rowsPerBand) -> ARRAY<LONG>`. */
-case class MinHashBandKeys(child: Expression, bands: Int, rowsPerBand: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(s"MinHashBandKeys requires ARRAY<LONG>, got $other")
-  }
-  override def nullSafeEval(input: Any): Any =
-    HashKernels.bandKeys(input.asInstanceOf[ArrayData], bands, rowsPerBand)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashKernels.bandKeys($c, $bands, $rowsPerBand)")
-  override protected def withNewChildInternal(newChild: Expression): MinHashBandKeys =
-    copy(child = newChild)
-}
-
-/** `SimHash64(hashes ARRAY<LONG>, seed) -> LONG`. */
-case class SimHash64(child: Expression, seed: Long) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(s"SimHash64 requires ARRAY<LONG>, got $other")
-  }
-  override def nullSafeEval(input: Any): Any =
-    HashKernels.simHash(input.asInstanceOf[ArrayData], seed)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashKernels.simHash($c, ${seed}L)")
-  override protected def withNewChildInternal(newChild: Expression): SimHash64 =
-    copy(child = newChild)
-}
-
-/**
- * `SimHashBandKeys(fp LONG, segments, choose) -> ARRAY<LONG>` — guaranteed-
- * collision LSH keys at hamming radius `segments - choose` (see
- * HashKernels.simhashBandKeys).
- */
-case class SimHashBandKeys(child: Expression, segments: Int, choose: Int) extends UnaryExpression {
-  require(64 % segments == 0 && segments >= 2, s"segments must divide 64, got $segments")
-  require(choose == 1 || choose == 2, s"choose must be 1 or 2, got $choose")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == LongType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure("SimHashBandKeys requires LONG")
-  override def nullSafeEval(input: Any): Any =
-    HashKernels.simhashBandKeys(input.asInstanceOf[Long], segments, choose)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashKernels.simhashBandKeys($c, $segments, $choose)")
-  override protected def withNewChildInternal(newChild: Expression): SimHashBandKeys =
-    copy(child = newChild)
-}
-
-/** `RollingFingerprint(text) -> LONG` (FNV-1a over UTF-16 chars). */
-case class RollingFingerprint(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure("RollingFingerprint requires STRING")
-  override def nullSafeEval(input: Any): Any =
-    HashKernels.rollingFingerprint(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashKernels.rollingFingerprint($c)")
-  override protected def withNewChildInternal(newChild: Expression): RollingFingerprint =
-    copy(child = newChild)
-}
-
-/** `HammingDist64(a LONG, b LONG) -> INT` — for SimHash near-dup radius. */
-case class HammingDist64(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = IntegerType
-  override def nullIntolerant: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == LongType && right.dataType == LongType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure("HammingDist64 requires (LONG, LONG)")
-  override def nullSafeEval(a: Any, b: Any): Any =
-    HashKernels.hammingDistance64(a.asInstanceOf[Long], b.asInstanceOf[Long])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"java.lang.Long.bitCount($a ^ $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): HammingDist64 =
-    copy(left = l, right = r)
 }

@@ -2,11 +2,7 @@ package graft.functions
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /**
@@ -24,7 +20,7 @@ import org.apache.spark.unsafe.types.UTF8String
  *
  * Sentences partition the input exactly (concat(sentences) == text), the
  * invariant the window machinery downstream relies on. The scan is a single
- * forward pass (no regex backtracking), codegen'd via `SplitSentences`.
+ * forward pass (no regex backtracking), codegen'd as `split_sentences`.
  */
 object SentenceKernels {
 
@@ -93,19 +89,4 @@ object SentenceKernels {
     if (start < n) out += UTF8String.fromString(str.substring(start))
     new GenericArrayData(out.toArray)
   }
-}
-
-/** `SplitSentences(text) -> ARRAY<STRING>` (sentences partition the text). */
-case class SplitSentences(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure("SplitSentences requires STRING")
-  override def nullSafeEval(input: Any): Any =
-    SentenceKernels.splitSentences(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.SentenceKernels.splitSentences($c)")
-  override protected def withNewChildInternal(newChild: Expression): SplitSentences =
-    copy(child = newChild)
 }

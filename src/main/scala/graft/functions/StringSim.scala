@@ -2,10 +2,6 @@ package graft.functions
 
 import java.text.Normalizer
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, DoubleType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /**
@@ -166,58 +162,4 @@ object StringSimKernels {
   }
 
   def normalizeU(s: UTF8String): UTF8String = UTF8String.fromString(normalize(s.toString))
-}
-
-/** `JaroWinkler(a STRING, b STRING) -> DOUBLE` — codegen'd static call. */
-case class JaroWinkler(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == StringType && right.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"JaroWinkler requires (STRING, STRING), got (${left.dataType}, ${right.dataType})")
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    StringSimKernels.jaroWinklerU(a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.StringSimKernels.jaroWinklerU($a, $b)")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): JaroWinkler =
-    copy(left = l, right = r)
-}
-
-/** `LevenshteinSim(a, b) -> DOUBLE` = 1 - lev(a,b)/max(len). */
-case class LevenshteinSim(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == StringType && right.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure("LevenshteinSim requires (STRING, STRING)")
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    StringSimKernels.levenshteinSim(a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.StringSimKernels.levenshteinSim($a, $b)")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): LevenshteinSim =
-    copy(left = l, right = r)
-}
-
-/** `NormalizeText(s) -> STRING` — NFD-fold + lower + alnum-collapse. */
-case class NormalizeText(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def nullIntolerant: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure("NormalizeText requires STRING")
-
-  override def nullSafeEval(input: Any): Any =
-    StringSimKernels.normalizeU(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.StringSimKernels.normalizeU($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): NormalizeText =
-    copy(child = newChild)
 }

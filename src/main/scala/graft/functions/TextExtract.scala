@@ -3,9 +3,6 @@ package graft.functions
 import java.nio.charset.StandardCharsets
 import java.util.Locale
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{BinaryType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /**
@@ -37,11 +34,14 @@ object TextExtract {
     "table", "tr", "br", "title", "article", "section", "header", "footer",
     "blockquote", "pre", "hr", "td", "th")
 
-  /** Pure html-bytes → text. Called from both interpreted eval and codegen. */
+  /** Pure html-bytes → text. */
   def extract(html: Array[Byte]): String = {
     if (html == null) return null
     extractString(new String(html, StandardCharsets.UTF_8))
   }
+
+  /** [[extract]] as the `extract_text` kernel's STRING result. */
+  def extractU(html: Array[Byte]): UTF8String = UTF8String.fromString(extract(html))
 
   def extractString(s: String): String = {
     val n = s.length
@@ -150,29 +150,4 @@ object TextExtract {
     }
     out.toString
   }
-}
-
-/**
- * Catalyst expression wrapper: `ExtractText(html BINARY) -> STRING`.
- * Codegen emits a single static call — stays inside whole-stage codegen.
- */
-case class ExtractText(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def nullIntolerant: Boolean = true
-  override def checkInputDataTypes() = {
-    if (child.dataType == BinaryType) org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"ExtractText requires BINARY input, got ${child.dataType}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    UTF8String.fromString(TextExtract.extract(input.asInstanceOf[Array[Byte]]))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"org.apache.spark.unsafe.types.UTF8String.fromString(" +
-        s"graft.functions.TextExtract.extract($c))")
-
-  override protected def withNewChildInternal(newChild: Expression): ExtractText =
-    copy(child = newChild)
 }

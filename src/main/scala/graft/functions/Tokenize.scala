@@ -3,9 +3,7 @@ package graft.functions
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -46,20 +44,4 @@ object TokenizeKernels {
     }
     new GenericArrayData(out.toArray)
   }
-}
-
-/** `TokenizeWithOffsets(text) -> ARRAY<STRUCT<text,i,idx,idx_end>>`. */
-case class TokenizeWithOffsets(child: Expression) extends UnaryExpression {
-  override def dataType: DataType =
-    ArrayType(TokenizeKernels.tokenType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure("TokenizeWithOffsets requires STRING")
-  override def nullSafeEval(input: Any): Any =
-    TokenizeKernels.tokenizeOffsets(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TokenizeKernels.tokenizeOffsets($c)")
-  override protected def withNewChildInternal(newChild: Expression): TokenizeWithOffsets =
-    copy(child = newChild)
 }

@@ -1,10 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types._
 
 /**
  * Dense-vector kernels over `ARRAY<FLOAT>` embedding columns (SURVEY.md
@@ -84,55 +80,4 @@ object VectorKernels {
     }
     new GenericArrayData(out)
   }
-}
-
-/** `CosineSim(a ARRAY<FLOAT>, b ARRAY<FLOAT>) -> DOUBLE`. */
-case class CosineSim(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-  private def ok(dt: DataType) = dt match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (ok(left.dataType) && ok(right.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"CosineSim requires (ARRAY<FLOAT>, ARRAY<FLOAT>), got (${left.dataType}, ${right.dataType})")
-  override def nullSafeEval(a: Any, b: Any): Any =
-    VectorKernels.cosine(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.VectorKernels.cosine($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): CosineSim =
-    copy(left = l, right = r)
-}
-
-/** `DotProduct(a ARRAY<FLOAT>, b ARRAY<FLOAT>) -> DOUBLE`. */
-case class DotProduct(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (ArrayType(FloatType, _), ArrayType(FloatType, _)) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(s"DotProduct requires (ARRAY<FLOAT>, ARRAY<FLOAT>), got $other")
-  }
-  override def nullSafeEval(a: Any, b: Any): Any =
-    VectorKernels.dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.VectorKernels.dot($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): DotProduct =
-    copy(left = l, right = r)
-}
-
-/** `SrpBandKeys(vec ARRAY<FLOAT>, bands, bits, seed) -> ARRAY<LONG>`. */
-case class SrpBandKeys(child: Expression, bands: Int, bits: Int, seed: Long) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(s"SrpBandKeys requires ARRAY<FLOAT>, got $other")
-  }
-  override def nullSafeEval(input: Any): Any =
-    VectorKernels.srpBandKeys(input.asInstanceOf[ArrayData], bands, bits, seed)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.VectorKernels.srpBandKeys($c, $bands, $bits, ${seed}L)")
-  override protected def withNewChildInternal(newChild: Expression): SrpBandKeys =
-    copy(child = newChild)
 }

@@ -15,8 +15,8 @@ import graft.schema.MatchEdge
  * (`modeling_relik.py:927-930`) with the edge threshold (F3).
  *
  * Two implementations with identical semantics:
- *   - `score`: pure codegen'd Catalyst expressions (JaroWinkler,
- *     LevenshteinSim, MinHashOverlap) — the default; stays inside a single
+ *   - `score`: pure codegen'd kernel calls (jaro_winkler,
+ *     levenshtein_sim, minhash_overlap) — the default; stays inside a single
  *     WholeStageCodegen span, no shuffle (pairs already carry both payloads).
  *   - `scoreTyped`: a typed `mapPartitions` batch kernel — the reference's
  *     token-budget-batched scorer shape (`relik_reader_data.py:781-810`),

@@ -66,14 +66,23 @@ class PlanQualitySpec extends SparkSpec {
 
   test("custom expressions stay inside WholeStageCodegen") {
     import graft.functions.GraftFunctions._
+    // the ER hot-path kernels among them: features, banding, scoring
+    val sig = minhash_signature(tf_filtered_hashes(split(normalize_text(col("text")), " ")), 16)
     val df = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select(jaro_winkler(col("text"), col("source")).as("jw"),
-        rolling_fingerprint(col("text")).as("fp"))
+        rolling_fingerprint(col("text")).as("fp"),
+        levenshtein_sim(col("text"), col("source")).as("lev"),
+        minhash_band_keys(sig, 4, 4).as("keys"), minhash_overlap(sig, sig).as("overlap"))
     df.collect() // force codegen
     val plan = df.queryExecution.executedPlan.toString
-    // whole-stage-codegen'd operators carry the "*(stageId)" prefix
-    assert(plan.contains("WholeStageCodegen") || plan.contains("*(1) Project"),
-      s"expected codegen'd projection:\n$plan")
+    // whole-stage-codegen'd operators carry the "*(stageId)" prefix; each
+    // kernel must be a static call inside one of them
+    val codegened = plan.linesIterator.filter(_.trim.startsWith("*(")).mkString("\n")
+    Seq("jaroWinklerU", "rollingFingerprint", "levenshteinSim", "tfFilteredHashes",
+        "minHashSig", "bandKeys", "sigOverlap").foreach { m =>
+      assert(s"static_invoke\\(graft\\.functions\\.\\w+\\.$m\\(".r.findFirstIn(codegened).nonEmpty,
+        s"$m not in a codegen'd operator:\n$plan")
+    }
   }
 
   test("no registered query plans a CartesianProduct") {

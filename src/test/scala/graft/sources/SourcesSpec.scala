@@ -115,4 +115,17 @@ class SourcesSpec extends SparkSpec {
     assert(back.count() == 2)
     assert(back.schema("vec").dataType.simpleString == "array<float>")
   }
+
+  test("dataBytes: a parquet directory measures the sum of its part files") {
+    val root = java.nio.file.Files.createTempDirectory("graft-bytes").toFile
+    val dir = s"$root/t.parquet"
+    try {
+      spark.range(3000).selectExpr("id", "cast(id AS string) AS s").repartition(3).write.parquet(dir)
+      val parts = new java.io.File(dir).listFiles.filter(_.getName.startsWith("part-"))
+      assert(parts.length == 3)
+      assert(graft.SparkEntry.dataBytes(spark, dir) == parts.map(_.length).sum)
+      // a single-file layout measures as before (java.io.File#length)
+      assert(graft.SparkEntry.dataBytes(spark, parts.head.getPath) == parts.head.length)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(root)
+  }
 }
